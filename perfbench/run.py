@@ -2,15 +2,15 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload benefits_sql --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload benefits_sql --seed 1 --seconds 6 --trace 0
 
-Workloads: ``benefits_sql`` and ``cdc_upsert`` (listed in ``BENCHMARK.json``),
-``vector_search`` and ``corpus_curation`` (run by hand; see ``README.md``).
-One client sends an op, waits for it, checks its output and sends the next,
-on ``local[<cores>]`` with ``SPARK_GRAFT_CPUS`` pinned to the cores this
-process may run on. Inputs are generated from ``--seed`` under
-``.perfbench/`` in the current directory; Spark's scratch space and
-temporary files go there too, and the directory is removed on exit.
+Workloads: ``benefits_sql``, ``cdc_upsert`` and ``vector_search`` (see
+``README.md``). One client sends an op, waits for it, checks its output and
+sends the next, on ``local[<cores>]`` with ``SPARK_GRAFT_CPUS`` pinned to
+the cores this process may run on. The workloads read the sf0.1 tables
+under ``data/``; the CDC stream they generate from ``--seed``, Spark's
+scratch space and temporary files go to ``.perfbench/`` in the current
+directory, which is removed on exit.
 
 The last line of standard output is one JSON object::
 
@@ -51,9 +51,9 @@ END_TO_END = {  # name -> unit
     "live_mb": "MiB",
 }
 
-# Per-layer metrics every workload reports; a workload adds its own in
-# ``Workload.layer_units``. Time inside a layer is given as its share of the
-# op's wall time, so a layer a workload never enters reads 0 as a ratio.
+# Per-layer metrics; every workload reports all of them. Time inside a layer
+# is given as its share of the op's wall time, so a layer a workload never
+# enters reads 0 as a ratio.
 LAYER_UNITS = {
     "session.import_s": "s",
     "session.build_s": "s",
@@ -89,6 +89,9 @@ LAYER_UNITS = {
     "cache.persists": "count",
     "cache.released": "count",
     "cache.cached_bytes": "bytes",
+    "similarity.build_share": "ratio",
+    "similarity.exec_share": "ratio",
+    "similarity.pairs_scored": "count",
     "trace.p50_s": "s",
     "trace.ops_per_s": "1/s",
 }
@@ -99,10 +102,6 @@ SPAN_SHARE = {
     "sources.load_table": "sources.load_table_share",
     "similarity.build": "similarity.build_share",
     "similarity.exec": "similarity.exec_share",
-    "curation.clean": "curation.clean_share",
-    "dedup.minhash_pairs": "dedup.minhash_pairs_share",
-    "dedup.cc": "dedup.cc_share",
-    "packing.mixture_pack": "packing.mixture_pack_share",
 }
 # span name -> metric holding how many times the op entered it
 SPAN_CALLS = {
@@ -119,34 +118,41 @@ STREAMING_SHARE = {
 }
 
 
-def _proc_mb(pids: list[int], field: str) -> float:
-    """Sum of ``field`` (``VmHWM``, ``VmRSS``) of the processes, in MiB."""
+def _peak_mb(pids: list[int]) -> float:
+    """Sum of the processes' peak resident set (``VmHWM``), in MiB."""
     total_kb = 0
     for pid in pids:
         with open(f"/proc/{pid}/status") as fh:
             for line in fh:
-                if line.startswith(field + ":"):
+                if line.startswith("VmHWM:"):
                     total_kb += int(line.split()[1])
     return total_kb / 1024.0
 
 
 def _memory(spark) -> tuple[float, float]:
-    """Peak resident memory of driver and JVM, and the memory they still hold
-    after full garbage collections: the driver's resident set plus the JVM's
-    heap and non-heap in use. The peak follows the collector's timing and
-    varies by a fifth between runs; the held memory varies by about 1%.
-    Spark's context cleaner frees broadcasts and shuffles of collected plans
-    on its own thread, so the JVM is collected again after it has run."""
+    """Peak resident memory of driver and JVM, and the memory the JVM still
+    holds after full garbage collections (heap and non-heap in use). The peak
+    follows the collector's timing and varies by a fifth between runs. The
+    driver's resident set is left out of the held memory: it is mostly the
+    benchmark's own collected results and oracle frames, which the allocator
+    keeps after they are freed. A collection frees what Python and Spark's
+    context cleaner have let go of by then; both release more on their own
+    threads afterwards, so the JVM is collected until the memory in use
+    holds still."""
     jvm = spark.sparkContext._jvm
     pids = [os.getpid(), jvm.java.lang.ProcessHandle.current().pid()]
-    peak = _proc_mb(pids, "VmHWM")
-    gc.collect()
-    jvm.java.lang.System.gc()
-    time.sleep(1.0)
-    jvm.java.lang.System.gc()
+    peak = _peak_mb(pids)
     mx = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-    jvm_used = mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()
-    return peak, _proc_mb(pids[:1], "VmRSS") + jvm_used / 2**20
+    used = None
+    for _ in range(8):
+        gc.collect()
+        jvm.java.lang.System.gc()
+        time.sleep(0.5)
+        last = used
+        used = (mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()) / 2**20
+        if last is not None and abs(used - last) < 0.01 * last:
+            break
+    return peak, used
 
 
 def _stop_spark(spark) -> None:
@@ -172,7 +178,8 @@ def _stop_spark(spark) -> None:
 
 
 def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[dict, dict]:
-    import datagen
+    import pyarrow.parquet as pq
+
     import tracing
     from workloads import WORKLOADS
 
@@ -187,9 +194,7 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
         mark = now
 
     tracer = tracing.Tracer(traced)
-    wl_class = WORKLOADS[name]
-    corpus = datagen.Corpus(os.path.join(work, "data"), seed, wl_class.tables)
-    wl = wl_class(corpus, seed, work, tracer)
+    wl = WORKLOADS[name](seed, work, tracer)
     phase("generate")
 
     # ---- set-up: import, session, first action, warm-up ops ----
@@ -212,10 +217,11 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
     try:
         spark.range(1).count()
         wl.start(spark)
-        for i in range(wl.warmup_ops):
+        for i in range(wl.warmup_ops):  # ops and reads as the timed loop runs them
             wl.warmup(i)
             cache.release_persisted()
-        wl.read_probe()
+            if i % wl.read_every == 0:
+                wl.read_probe()
         setup_s = time.perf_counter() - t0
         session = {
             "session.import_s": t_import - t0,
@@ -233,7 +239,6 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
             for module, attr, span in (
                 (f"{PACKAGE}.sources.parquet", "load_table", "sources.load_table"),
                 (f"{PACKAGE}.cache", "tracked_persist", "cache.persist"),
-                *wl.spans,
             )
         ]
         latencies: list[float] = []
@@ -241,19 +246,23 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
         reads: list[float] = []
         attempted = wl.warmup_ops
         deadline = time.perf_counter() + 3 * seconds + 60
-        with tracing.wrapped(tracer, targets, on_result=wl.capture):
+        with tracing.wrapped(tracer, targets):
             i = 0
             while (sum(latencies) < seconds or i < wl.min_ops or i % wl.ops_per_round) \
                     and time.perf_counter() < deadline:
                 with tracer.op(i):
                     start = time.perf_counter()
-                    ok = wl.op(i)
+                    out = wl.op(i)
                     latencies.append(time.perf_counter() - start)
                 by_kind.setdefault(wl.kind(i), []).append(latencies[-1])
-                reads.append(wl.read_probe())
-                ok = wl.after_op(i) and ok
-                if traced:
-                    _trace_op(spark, wl, tracer)
+                if i % wl.read_every == 0:
+                    reads.append(wl.read_probe())
+                ok = wl.check(i, out)
+                del out
+                if traced:  # while the op's persisted intermediates live
+                    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+                    tracer.count("cache.cached_bytes",
+                                 sum(r.memSize() + r.diskSize() for r in infos))
                 tracer.count("cache.released", cache.release_persisted())
                 failed += not ok
                 attempted += 1
@@ -261,10 +270,9 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
         phase("timed_loop")
         peak_rss_mb, live_mb = _memory(spark)
 
-        p50_s = statistics.median(statistics.median(v) for v in by_kind.values())
         metrics = {
             "setup_s": setup_s,
-            "p50_s": p50_s,
+            "p50_s": _p50(by_kind),
             "ops_per_s": len(latencies) / sum(latencies),
             "read_p50_s": statistics.median(reads),
             "live_mb": live_mb,
@@ -286,8 +294,8 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
         "samples": len(latencies),
         "warmup_ops": wl.warmup_ops,
         "error_rate": failed / attempted,
-        "input_rows": corpus.rows,
-        "input_bytes": corpus.bytes,
+        "input_rows": {t: pq.ParquetFile(p).metadata.num_rows for t, p in wl.inputs.items()},
+        "input_bytes": sum(os.path.getsize(p) for p in wl.inputs.values()),
         "peak_rss_mb": peak_rss_mb,
         "phase_s": phases,
     }
@@ -300,11 +308,15 @@ def run(name: str, seed: int, seconds: float, traced: bool, work: str) -> tuple[
     return context, result
 
 
-def _trace_op(spark, wl, tracer) -> None:
-    """Counts taken after an op, while its persisted intermediates live."""
-    wl.trace_counts()
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    tracer.count("cache.cached_bytes", sum(r.memSize() + r.diskSize() for r in infos))
+def _p50(by_kind: dict[str, list[float]]) -> float:
+    """The median latency of each kind of op, averaged over the kinds.
+
+    With one kind this is the plain median. ``benefits_sql`` mixes four fast
+    and four slow queries: the plain median of its ops falls in the gap
+    between the groups and the median of the queries' medians is the mean of
+    two of them, so either jumps with a single query's noise; the mean of
+    all eight medians weighs every query equally and varies less."""
+    return statistics.fmean(statistics.median(v) for v in by_kind.values())
 
 
 def _layer_metrics(spark, wl, tracer, session, latencies, by_kind, cores):
@@ -314,9 +326,9 @@ def _layer_metrics(spark, wl, tracer, session, latencies, by_kind, cores):
     from workloads import BenefitsSql
 
     rest = tracing.SparkRest(spark)
-    per_op = tracing.spark_op_metrics(rest, tracer, cores, wl.span_jobs)
+    per_op = tracing.spark_op_metrics(rest, tracer, cores)
     query_ratio = {q: f"queries.{q}.p50_ratio" for q in BenefitsSql.QUERIES}
-    units = {**LAYER_UNITS, **dict.fromkeys(query_ratio.values(), "ratio"), **wl.layer_units}
+    units = {**LAYER_UNITS, **dict.fromkeys(query_ratio.values(), "ratio")}
     rows = []
     for op, spark_m in zip(tracer.ops, per_op):
         wall = op.end - op.start
@@ -338,8 +350,7 @@ def _layer_metrics(spark, wl, tracer, session, latencies, by_kind, cores):
         rows.append(m)
     metrics = {k: tracing.median([r[k] for r in rows]) for k in units}
     metrics.update(session)
-    p50_s = statistics.median(statistics.median(v) for v in by_kind.values())
-    metrics["trace.p50_s"] = p50_s
+    p50_s = metrics["trace.p50_s"] = _p50(by_kind)
     metrics["trace.ops_per_s"] = len(latencies) / sum(latencies)
     for q, metric in query_ratio.items():  # each query's median over p50_s
         metrics[metric] = statistics.median(by_kind[q]) / p50_s if q in by_kind else 0.0

@@ -128,13 +128,12 @@ class Tracer:
 
 
 @contextlib.contextmanager
-def wrapped(tracer: Tracer, targets: list[tuple[object, str, str]], on_result=None):
+def wrapped(tracer: Tracer, targets: list[tuple[object, str, str]]):
     """Record a span around each ``module.attr`` call while the block runs.
 
     ``targets`` is a list of ``(module, attribute, span name)``. A function
     that other engine modules imported by name is re-bound in each of them,
-    so their calls are seen too. ``on_result(span name, result)`` receives
-    each call's return value. A target the engine no longer has is reported
+    so their calls are seen too. A target the engine no longer has is reported
     on stderr and skipped: its span metrics then read 0.
     """
     if not tracer.enabled:
@@ -150,10 +149,7 @@ def wrapped(tracer: Tracer, targets: list[tuple[object, str, str]], on_result=No
 
         def wrapper(*args, __original=original, __name=name, **kwargs):
             with tracer.span(__name):
-                result = __original(*args, **kwargs)
-            if on_result is not None:
-                on_result(__name, result)
-            return result
+                return __original(*args, **kwargs)
 
         for mod in list(sys.modules.values()):
             if (getattr(mod, "__name__", "").startswith("full_data_infrastructure_spark")
@@ -232,16 +228,13 @@ def _union_seconds(intervals: list[tuple[float, float]]) -> float:
 
 
 def spark_op_metrics(
-    rest: SparkRest, tracer: Tracer, cores: int, span_jobs: dict[str, str]
+    rest: SparkRest, tracer: Tracer, cores: int
 ) -> list[dict[str, float]]:
-    """Per-op job, stage and task metrics, in the order of ``tracer.ops``.
-
-    ``span_jobs`` maps a metric name to a span name: the metric counts the
-    op's jobs started inside spans of that name.
-    """
+    """Per-op job, stage and task metrics, in the order of ``tracer.ops``."""
     rest.settle()
     jobs = rest.get("/jobs")
-    executions = rest.get("/sql?details=true&planDescription=false")
+    # /sql pages its list; the default page is the first 20 executions.
+    executions = rest.get("/sql?details=true&planDescription=false&offset=0&length=1000000")
     # A retried stage lists once per attempt; the last completed one stands.
     stages = {s["stageId"]: s for s in rest.get("/stages?status=complete")}
     out = []
@@ -299,9 +292,6 @@ def spark_op_metrics(
             )
             median, top = summary["executorRunTime"]
             m["spark.task_skew"] = top / median if median > 0 else 1.0
-        for metric, span in span_jobs.items():
-            groups = tracer.span_ids(op, span)
-            m[metric] = sum(1 for j in mine if j.get("jobGroup") in groups)
         out.append(m)
     return out
 

@@ -1,27 +1,33 @@
-"""The four workloads: what one op does, its warm-up, and its output check.
+"""The workloads: what one op does, its warm-up, and its output check.
 
 Each workload drives the engine only through public entry points (registry
 builders, ``file_cdc_source``/``decode_cdc_stream``/``start_upsert_sink``,
-``knn_bruteforce``, ``cache.release_persisted``) on inputs generated from the
-seed. An op returns whether its output passed the check; the harness times
-it and counts failures.
+``knn_bruteforce``, ``cache.release_persisted``). An op returns its output;
+the harness times the op, then checks the output untimed and counts the op
+as failed if the check does not pass.
+
+``data/sf0.1/`` holds byte-identical copies of the project's sf0.1 test
+tables the workloads read (the seven warehouse tables the ``benefits_sql``
+queries join, and ``embeddings``), so a run reads only files of its own
+checkout. The seed drives what is done with them: the query order, the
+perturbed query vectors and the CDC change stream.
 """
 
 from __future__ import annotations
 
 import decimal
-import hashlib
 import json
 import os
 import sys
 import time
-from collections import defaultdict
 
 import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
 
-import datagen
 from tracing import Tracer
 
+SF_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.1")
 
 
 def noop_write(df) -> None:
@@ -32,21 +38,17 @@ def noop_write(df) -> None:
 
 class Workload:
     name = ""
-    tables: tuple[str, ...] = ()  # datagen.Corpus groups the workload reads
-    layer_units: dict[str, str] = {}  # per-layer metrics only this workload has
     ops_per_round = 1  # the timed loop stops only at a round boundary
     min_ops = 1  # ... and not before this many ops
     warmup_ops = 1
-    # (module path, attribute, span name) wrapped with a span in the traced run
-    spans: tuple[tuple[str, str, str], ...] = ()
-    span_jobs: dict[str, str] = {}
+    read_every = 1  # the harness reads the workload's table after every n-th op
 
-    def __init__(self, corpus: datagen.Corpus, seed: int, work: str, tracer: Tracer):
-        self.corpus = corpus
+    def __init__(self, seed: int, work: str, tracer: Tracer):
         self.seed = seed
         self.work = work
         self.tracer = tracer
         self.spark = None
+        self.inputs: dict[str, str] = {}  # table -> parquet file the workload reads
 
     def start(self, spark) -> None:
         """Set-up that a user pays once per session (timed in ``setup_s``)."""
@@ -60,27 +62,20 @@ class Workload:
         checks of the warm-up outputs. Returns how many warm-up ops failed."""
         return 0
 
-    def op(self, i: int) -> bool:
+    def op(self, i: int):
+        """Run op ``i`` and return its output."""
         raise NotImplementedError
 
-    def after_op(self, i: int) -> bool:
+    def check(self, i: int, out) -> bool:
         """Untimed check of op ``i``'s output; returns whether it passed."""
         return True
 
-    def capture(self, span: str, result) -> None:
-        """Receives what a traced layer call returned."""
-
-    def trace_counts(self) -> None:
-        """Traced run only: counts taken after an op, before its persisted
-        intermediates are released."""
-
     def kind(self, i: int) -> str:
-        """What op ``i`` runs; ``p50_s`` is the median of the kinds' medians."""
+        """What op ``i`` runs; ``p50_s`` averages the kinds' medians."""
         return self.name
 
     def read_probe(self) -> float:
-        """Seconds for a reader to scan the workload's lake table in full;
-        the harness probes once after every op."""
+        """Seconds for a reader to scan the workload's lake table in full."""
         t0 = time.perf_counter()
         noop_write(self.spark.read.parquet(self.read_path()))
         return time.perf_counter() - t0
@@ -97,11 +92,29 @@ class Workload:
 # --------------------------------------------------------------------------
 
 
+class _Collected:
+    """An already collected result in the shape ``oracle_check.compare``
+    reads: it calls ``toPandas()`` and relabels the frame it gets."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        self._pdf = pdf
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._pdf.copy()
+
+
+def fingerprint(pdf: pd.DataFrame) -> tuple:
+    """Column names, dtypes and the multiset of row hashes: equal for two
+    collections of the same result in any row order."""
+    rows = np.sort(pd.util.hash_pandas_object(pdf, index=False).to_numpy())
+    return tuple(pdf.columns), tuple(map(str, pdf.dtypes)), rows.tobytes()
+
+
 class BenefitsSql(Workload):
     """A seeded shuffle of 8 registered analytics queries per round."""
 
     name = "benefits_sql"
-    tables = ("relational",)
+    TABLES = ("region", "nation", "customer", "supplier", "orders", "lineitem", "events")
     QUERIES = (
         "flagship_benefits",
         "bu_salary_dashboard",
@@ -113,16 +126,17 @@ class BenefitsSql(Workload):
         "tpch_q5_region_volume",
     )
     ops_per_round = len(QUERIES)
-    min_ops = 2 * len(QUERIES)  # the median of two rounds, not of one
+    min_ops = 3 * len(QUERIES)  # each query's median is taken over 3 or more samples
     warmup_ops = len(QUERIES)
+    read_every = 4
 
     def __init__(self, *args):
         super().__init__(*args)
-        rng = np.random.default_rng([self.seed, 1])
+        self.inputs = {t: os.path.join(SF_DIR, f"{t}.parquet") for t in self.TABLES}
+        self._rng = np.random.default_rng([self.seed, 1])
         self._rounds: list[list[str]] = []
-        self._rng = rng
-        self._warm: dict[str, object] = {}
-        self.passed: dict[str, bool] = {}
+        self._warm: dict[str, pd.DataFrame] = {}
+        self._expected: dict[str, tuple | None] = {}  # None: the oracle check failed
 
     def kind(self, i: int) -> str:
         while len(self._rounds) <= i // self.ops_per_round:
@@ -136,41 +150,56 @@ class BenefitsSql(Workload):
         self.builders = registry.queries()
 
     def warmup(self, i: int) -> None:
-        """One round, collecting each result for the oracle check."""
-        name = self.QUERIES[i]
-        self._warm[name] = self.builders[name](self.spark, self.corpus.dir).toPandas()
+        """One round in registry order, each result kept for the oracle."""
+        self._warm[self.QUERIES[i]] = self._run(self.QUERIES[i])
 
     def after_setup(self) -> int:
+        """Each warm-up result against its DuckDB oracle, with
+        ``tests/oracle_check.compare``; a result that passes becomes the
+        reference every timed op of that query is checked against."""
         import duckdb
 
-        from checks import compare_frames
         from full_data_infrastructure_spark import queries as registry
+        from tests.oracle_check import compare
 
         oracles = registry.oracle_sql()
         con = duckdb.connect()
         try:
-            for table in self.corpus.rows:
-                path = os.path.join(self.corpus.dir, f"{table}.parquet")
+            for table, path in self.inputs.items():
                 con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
-            for name in self.QUERIES:
-                expected = con.sql(oracles[name]).fetchdf()
-                ok, msg = compare_frames(self._warm[name], expected)
-                self.passed[name] = ok
+            for name, pdf in self._warm.items():
+                ok, msg = compare(_Collected(pdf), con.sql(oracles[name]))
+                self._expected[name] = fingerprint(pdf) if ok else None
                 if not ok:
                     print(f"# check failed: {name}: {msg}", file=sys.stderr)
         finally:
             con.close()
-        return sum(not ok for ok in self.passed.values())
+        self._warm.clear()  # live_mb measures what the engine holds, not this
+        return sum(fp is None for fp in self._expected.values())
 
-    def op(self, i: int) -> bool:
-        name = self.kind(i)
+    def _run(self, name: str) -> pd.DataFrame:
+        """Build the query and collect every output column, as a dashboard
+        does."""
         with self.tracer.span("queries.build"):
-            df = self.builders[name](self.spark, self.corpus.dir)
-        noop_write(df)
-        return self.passed[name]
+            df = self.builders[name](self.spark, SF_DIR)
+        return df.toPandas()
+
+    def op(self, i: int) -> pd.DataFrame:
+        return self._run(self.kind(i))
+
+    def check(self, i: int, out) -> bool:
+        name = self.kind(i)
+        expected = self._expected[name]
+        if expected is None:
+            return False
+        if fingerprint(out) != expected:
+            print(f"# check failed: {name}: op {i} differs from its oracle-checked "
+                  f"result ({len(out)} rows)", file=sys.stderr)
+            return False
+        return True
 
     def read_path(self) -> str:
-        return os.path.join(self.corpus.dir, "lineitem.parquet")
+        return self.inputs["lineitem"]
 
 
 # --------------------------------------------------------------------------
@@ -187,7 +216,10 @@ class CdcUpsert(Workload):
     ZIPF_S = 1.1
     OPS = ("c", "u", "d")
     OP_P = (0.25, 0.60, 0.15)
-    warmup_ops = 3  # the initial snapshot load plus two change batches
+    # The initial snapshot load plus nine change batches: an op's latency
+    # falls by a third over the first ten batches as the JIT compiles.
+    warmup_ops = 10
+    min_ops = 5
 
     def __init__(self, *args):
         super().__init__(*args)
@@ -289,12 +321,12 @@ class CdcUpsert(Workload):
     def after_setup(self) -> int:
         return 0 if self._snapshot_matches() else self.warmup_ops
 
-    def op(self, i: int) -> bool:
+    def op(self, i: int) -> None:
         self._next_batch(initial=False)
         self.query.processAllAvailable()
-        return True
 
-    def after_op(self, i: int) -> bool:
+    def check(self, i: int, out) -> bool:
+        """The harness has read the snapshot (``read_probe``) since the op."""
         if self.tracer.enabled:
             self._record_progress()
         return self._snapshot_matches()
@@ -352,126 +384,6 @@ class CdcUpsert(Workload):
 
 
 # --------------------------------------------------------------------------
-# corpus_curation
-# --------------------------------------------------------------------------
-
-
-class CorpusCuration(Workload):
-    """The registered full LSH corpus pipeline, collected and checked."""
-
-    name = "corpus_curation"
-    tables = ("documents",)
-    layer_units = {
-        "curation.clean_share": "ratio",
-        "curation.survivor_ratio": "ratio",
-        "dedup.minhash_pairs_share": "ratio",
-        "dedup.cc_share": "ratio",
-        "dedup.cc_jobs": "count",
-        "dedup.candidate_pairs": "count",
-        "dedup.pair_yield": "ratio",
-        "packing.mixture_pack_share": "ratio",
-    }
-    QUERY = "corpus_pipeline_full_lsh"
-    CONTEXT_TOKENS = 2048  # the packing budget the pipeline promises
-    spans = (
-        ("full_data_infrastructure_spark.operators.packing", "_clean_corpus",
-         "curation.clean"),
-        ("full_data_infrastructure_spark.operators.dedup", "minhash_dedup_pairs",
-         "dedup.minhash_pairs"),
-        ("full_data_infrastructure_spark.operators.dedup", "lsh_candidate_pairs",
-         "dedup.lsh_candidates"),
-        ("full_data_infrastructure_spark.operators.dedup", "connected_components_twostar",
-         "dedup.cc"),
-        ("full_data_infrastructure_spark.operators.packing", "_survivors_mixture_pack",
-         "packing.mixture_pack"),
-    )
-    span_jobs = {"dedup.cc_jobs": "dedup.cc"}
-
-    def __init__(self, *args):
-        super().__init__(*args)
-        docs = self.corpus.documents.to_pydict()
-        self.docs = {
-            d: (lang, len(text.lower().split()))
-            for d, lang, text in zip(docs["doc_id"], docs["lang"], docs["text"])
-        }
-        self._out = None
-        self.captured: dict[str, object] = {}
-
-    def start(self, spark) -> None:
-        super().start(spark)
-        from full_data_infrastructure_spark import queries as registry
-
-        self.build = registry.queries()[self.QUERY]
-
-    def after_setup(self) -> int:
-        return 0 if self.after_op(-1) else 1
-
-    def op(self, i: int) -> bool:
-        with self.tracer.span("queries.build"):
-            df = self.build(self.spark, self.corpus.dir)
-        self._out = df.toArrow()
-        return True
-
-    def capture(self, span: str, result) -> None:
-        self.captured[span] = result
-
-    def trace_counts(self) -> None:
-        t = self.tracer
-        if "curation.clean" in self.captured:
-            t.count("curation.survivor_ratio",
-                    self.captured["curation.clean"].count() / len(self.docs))
-        cand = self.captured.get("dedup.lsh_candidates")
-        kept = self.captured.get("dedup.minhash_pairs")
-        if cand is not None and kept is not None:
-            n_cand, n_kept = cand.count(), kept.count()
-            t.count("dedup.candidate_pairs", n_cand)
-            t.count("dedup.pair_yield", n_kept / n_cand if n_cand else 0.0)
-        self.captured.clear()
-
-    def after_op(self, i: int) -> bool:
-        """Invariants the generator can verify: every output doc is an input
-        doc with its language and token count, no injected exact-duplicate
-        pair survives, and each bucket's bins are packed contiguously within
-        the token budget."""
-        out = self._out.to_pydict()
-        problems = []
-        if not out["doc_id"]:
-            problems.append("empty output")
-        if len(set(out["doc_id"])) != len(out["doc_id"]):
-            problems.append("a doc_id appears twice")
-        for d, lang, n_tok in zip(out["doc_id"], out["lang"], out["n_tok"]):
-            if self.docs.get(d, (None, None)) != (lang, n_tok):
-                problems.append(f"doc {d} is not an input doc with its lang/tokens")
-                break
-        present = set(out["doc_id"])
-        for group in self.corpus.exact_dup_groups:
-            if sum(d in present for d in group) > 1:
-                problems.append(f"exact duplicates {group} both survived")
-                break
-        buckets = defaultdict(list)
-        for d, b, n, bin_id, off in zip(out["doc_id"], out["bucket"], out["n_tok"],
-                                        out["bin_id"], out["bin_offset"]):
-            key = hashlib.md5(str(d).encode()).hexdigest()
-            if b != key[:2]:
-                problems.append(f"doc {d} in bucket {b}")
-                break
-            buckets[b].append((key, n, bin_id, off))
-        for b, docs in buckets.items():
-            pos = 0
-            for _, n, bin_id, off in sorted(docs):
-                if not 0 <= off < self.CONTEXT_TOKENS or bin_id * self.CONTEXT_TOKENS + off != pos:
-                    problems.append(f"bucket {b} is not packed contiguously")
-                    break
-                pos += n
-        if problems:
-            print(f"# check failed: {self.QUERY}: {problems[0]}", file=sys.stderr)
-        return not problems
-
-    def read_path(self) -> str:
-        return os.path.join(self.corpus.dir, "documents.parquet")
-
-
-# --------------------------------------------------------------------------
 # vector_search
 # --------------------------------------------------------------------------
 
@@ -506,78 +418,79 @@ def exact_topk(queries: np.ndarray, corpus: np.ndarray, k: int) -> list[list[tup
 
 
 class VectorSearch(Workload):
-    """Exact top-k for a batch of perturbed corpus vectors, collected."""
+    """Exact top-k for a batch of perturbed sf0.1 vectors, collected."""
 
     name = "vector_search"
-    tables = ("embeddings",)
-    layer_units = {
-        "similarity.build_share": "ratio",
-        "similarity.exec_share": "ratio",
-        "similarity.pairs_scored": "count",
-    }
     N_QUERIES = 32
     NOISE = 0.05
     QUERY_ID_BASE = 1_000_000  # query ids never equal a corpus vec_id
+    warmup_ops = 12  # an op's latency falls by a third over the first dozen
+    min_ops = 5
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.inputs = {"embeddings": os.path.join(SF_DIR, "embeddings.parquet")}
+        table = pq.read_table(self.inputs["embeddings"])
+        if table["vec_id"].to_pylist() != list(range(len(table))):
+            raise ValueError("embeddings: vec_id must be 0..n-1 in row order")
+        self.vectors = np.stack(table["embedding"].to_numpy(zero_copy_only=False)).astype(np.float64)
+        self._queries: dict[int, np.ndarray] = {}  # op -> its query vectors, until checked
+        self._warm: list[tuple[int, list]] = []
 
     def start(self, spark) -> None:
         super().start(spark)
         from full_data_infrastructure_spark.operators import similarity
 
         self.similarity = similarity
-        self._rows = None
-        self._queries = None
-        self._warm: list[tuple] = []
 
     def _query_vectors(self, i: int) -> np.ndarray:
         rng = np.random.default_rng([self.seed, 4, i + 1000])
-        idx = rng.choice(len(self.corpus.vectors), self.N_QUERIES, replace=False)
-        return self.corpus.vectors[idx] + rng.normal(0.0, self.NOISE, (self.N_QUERIES, datagen.DIM))
+        idx = rng.choice(len(self.vectors), self.N_QUERIES, replace=False)
+        return self.vectors[idx] + rng.normal(0.0, self.NOISE, (self.N_QUERIES, self.vectors.shape[1]))
 
-    def op(self, i: int) -> bool:
+    def op(self, i: int) -> list:
         from pyspark.sql import functions as F
 
         from full_data_infrastructure_spark.sources.parquet import load_table
 
-        self._queries = self._query_vectors(i)
+        queries = self._queries[i] = self._query_vectors(i)
         with self.tracer.span("similarity.build"):
-            emb = load_table(self.spark, self.corpus.dir, "embeddings").select(
+            emb = load_table(self.spark, SF_DIR, "embeddings").select(
                 "vec_id", F.col("embedding").cast("array<double>").alias("e")
             )
             q = self.spark.createDataFrame(
-                [(self.QUERY_ID_BASE + j, v.tolist()) for j, v in enumerate(self._queries)],
+                [(self.QUERY_ID_BASE + j, v.tolist()) for j, v in enumerate(queries)],
                 "vec_id bigint, e array<double>",
             )
             df = self.similarity.knn_bruteforce(emb, q)
         with self.tracer.span("similarity.exec"):
-            self._rows = df.collect()
-        self.tracer.count("similarity.pairs_scored", len(self._queries) * len(self.corpus.vectors))
-        return True
+            rows = df.collect()
+        self.tracer.count("similarity.pairs_scored", len(queries) * len(self.vectors))
+        return rows
 
     def warmup(self, i: int) -> None:
-        self.op(-1 - i)
-        self._warm.append((self._queries, self._rows))
+        self._warm.append((-1 - i, self.op(-1 - i)))
 
     def after_setup(self) -> int:
-        failed = 0
-        for self._queries, self._rows in self._warm:
-            failed += not self.after_op(-1)
+        failed = sum(not self.check(i, rows) for i, rows in self._warm)
+        self._warm.clear()
         return failed
 
-    def after_op(self, i: int) -> bool:
+    def check(self, i: int, out) -> bool:
         k = self.similarity.TOP_K
         want = {
             (self.QUERY_ID_BASE + q, j, cos, r + 1)
-            for q, top in enumerate(exact_topk(self._queries, self.corpus.vectors, k))
+            for q, top in enumerate(exact_topk(self._queries.pop(i), self.vectors, k))
             for r, (j, cos) in enumerate(top)
         }
-        got = {(r["query_id"], r["neighbor_id"], r["cos"], r["rnk"]) for r in self._rows}
+        got = {(r["query_id"], r["neighbor_id"], r["cos"], r["rnk"]) for r in out}
         if got != want:
             print(f"# check failed: knn_bruteforce: {len(got ^ want)} rows differ",
                   file=sys.stderr)
         return got == want
 
     def read_path(self) -> str:
-        return os.path.join(self.corpus.dir, "embeddings.parquet")
+        return self.inputs["embeddings"]
 
 
-WORKLOADS = {w.name: w for w in (BenefitsSql, CdcUpsert, CorpusCuration, VectorSearch)}
+WORKLOADS = {w.name: w for w in (BenefitsSql, CdcUpsert, VectorSearch)}
