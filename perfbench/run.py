@@ -2,7 +2,7 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload benefits_sql --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload benefits_sql --seed 1 --seconds 3 --trace 0
 
 Workloads: ``benefits_sql``, ``cdc_upsert`` and ``vector_search`` (see
 ``README.md``). One client sends an op, waits for it, checks its output and
@@ -138,21 +138,23 @@ def _memory(spark) -> tuple[float, float]:
     keeps after they are freed. A collection frees what Python and Spark's
     context cleaner have let go of by then; both release more on their own
     threads afterwards, so the JVM is collected until the memory in use
-    holds still."""
+    holds still: until three readings in a row agree within 1%. Two readings
+    can agree while a release is pending and drop by half on the third."""
     jvm = spark.sparkContext._jvm
     pids = [os.getpid(), jvm.java.lang.ProcessHandle.current().pid()]
     peak = _peak_mb(pids)
     mx = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-    used = None
-    for _ in range(8):
+    used: list[float] = []
+    for _ in range(12):
         gc.collect()
         jvm.java.lang.System.gc()
         time.sleep(0.5)
-        last = used
-        used = (mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()) / 2**20
-        if last is not None and abs(used - last) < 0.01 * last:
+        used.append(
+            (mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()) / 2**20
+        )
+        if len(used) >= 3 and max(used[-3:]) < 1.01 * min(used[-3:]):
             break
-    return peak, used
+    return peak, min(used)
 
 
 def _stop_spark(spark) -> None:
